@@ -14,7 +14,7 @@ A run:
    Python worker pool, ``catalog.load_table`` for the workload's tables),
    stopping the session in between; ``setup_s`` is the median, and the
    first set-up is timed from before the engine is imported;
-3. runs one untimed warm-up pass that checks every output;
+3. runs untimed warm-up passes, the first of which checks every output;
 4. runs timed passes, each job in a seed-permuted order, until
    ``--seconds`` have passed and at least two passes ran; mr outputs are
    checked after every job;
@@ -119,8 +119,14 @@ def configure_env(work: str, extra: dict[str, str]) -> int:
         "TMPDIR": tmp,
         "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
         "PYSPARK_SUBMIT_ARGS": (
-            # no hsperfdata file: HotSpot would write it under /tmp
-            f"--driver-java-options '-Djava.io.tmpdir={tmp} -XX:-UsePerfData'"
+            # No hsperfdata file: HotSpot would write it under /tmp. C1 only:
+            # with C2 on, passes kept getting faster for the first minute
+            # or more while C2 compiled Spark's planner, so a run's figures
+            # depended on how far its JVM had got; C1 settles within two
+            # passes. An engine change whose gain only C2 brings out will
+            # not show here.
+            f"--driver-java-options '-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+            " -XX:TieredStopAtLevel=1'"
             " --conf spark.ui.showConsoleProgress=false pyspark-shell"
         ),
         **extra,
@@ -390,13 +396,15 @@ def run(args: argparse.Namespace, work: str) -> int:
     runner = Runner(wl, args.seed)
     tracer = tracing.Tracer(spark, False)
     t_warmup = time.perf_counter()
-    warm = runner.run_pass(spark, tracer, 0, True)
+    warm = [runner.run_pass(spark, tracer, -i, i == 0) for i in range(wl.warmup_passes)]
     t_timed = time.perf_counter()
     passes = runner.timed_passes(spark, tracer, args.seconds, 1)
     log(f"inputs {t0 - T_START:.1f}s, set-ups {t_warmup - t0:.1f}s"
-        f" (first {first['setup_s']:.1f}s), warm-up pass {t_timed - t_warmup:.1f}s,"
+        f" (first {first['setup_s']:.1f}s), warm-up passes {t_timed - t_warmup:.1f}s,"
         f" timed passes {time.perf_counter() - t_timed:.1f}s")
-    for p in [warm] + passes:
+    for s in setups:
+        log("setup " + " ".join(f"{k}={v:.3f}" for k, v in s.items()))
+    for p in warm + passes:
         log("pass " + " ".join(f"{j}={p[j]:.3f}" for j in wl.jobs))
 
     row = {

@@ -39,11 +39,10 @@ CORPUS_FILES = 8
 SORT_MEM_BYTES = {"bench": 512 << 10, "smoke": 200 << 10}
 
 TPCH = (
-    "q3_shipping_priority",
     "q6_forecast_revenue",
-    "q21_waiting_suppliers",
+    "q12_priority_by_status",
 )
-LLM = ("corpus_span_dedup",)
+LLM = ("dedup_exact_fingerprint",)
 STREAM = ("stream_tumbling_hourly",)
 
 
@@ -62,6 +61,9 @@ class MrJobs:
     tables: tuple[str, ...] = ()
     sf_dir = ""  # no catalog tables
     jobs = ("wordcount", "sort", "sort_spill", "grep")
+    # Untimed passes before the timed ones; the first checks every output.
+    # The mr jobs' times are flat from the second pass on.
+    warmup_passes = 1
 
     def __init__(self, root: str, work: str, seed: int, size: str):
         self.work = work
@@ -111,8 +113,10 @@ class MrJobs:
 
 class RegistryMix:
     name = "registry_mix"
-    tables = ("lineitem", "orders", "customer", "supplier", "nation", "events", "documents")
+    tables = ("lineitem", "orders", "events", "documents")
     jobs = TPCH + LLM + STREAM
+    # The registry jobs' times settle by the third pass.
+    warmup_passes = 2
 
     def __init__(self, root: str, work: str, seed: int, size: str):
         self.sf_dir = os.path.join(work, "tables")
