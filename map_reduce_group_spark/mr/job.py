@@ -12,10 +12,11 @@ Semantics reproduced (citations into /root/reference/):
   ``run_lines`` reproduces by re-appending '\n' around the shuffle
   (tests/test_mr_parity.py:test_tabless_line_newline_parity);
 - per-partition lexicographic full-line sort + k-way merge grouping
-  guarantee (worker/__main__.py:149, 168) →
-  ``repartitionAndSortWithinPartitions`` (Spark's sort-based shuffle spills
-  exactly like the reference's GNU-sort/heapq pipeline, minus the temp
-  files);
+  guarantee (worker/__main__.py:149, 168) → ``partitionBy`` then
+  ``_external_sorted`` per partition: in-memory sort under a budget, sorted
+  runs spilled to temp files and ``heapq.merge``d past it — the reference's
+  GNU-sort/heapq shape (``run_lines`` says why not
+  ``repartitionAndSortWithinPartitions``);
 - reducer: executable over the merged sorted stream
   (worker/__main__.py:174-181) → ``rdd.pipe(reducer)``;
 - sink: ``part-*`` files, output dir recreated per run

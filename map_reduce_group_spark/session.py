@@ -7,6 +7,20 @@ environment (local[N], single JVM) but the knobs are the ones that matter on a
 real cluster too: AQE for runtime re-planning (skew joins, partition
 coalescing), Arrow for any Python-side exchange, and a shuffle-partition count
 sized to the parallelism rather than Spark's legacy 200 default.
+
+Python workers. Every Python-worker task (``rdd.pipe``, ``mapInPandas``,
+``pandas_udf``, Python UDFs) used to pay about 150 ms before doing any work:
+PySpark's worker calls ``importlib.invalidate_caches()`` per task, and on
+Python < 3.12 each of the worker's 16 zipimporters (over ``pyspark.zip``, the
+py4j zip and the ``spark-core`` jar) re-reads its archive's whole directory.
+Sessions from :func:`get_session` launch their workers from
+:mod:`map_reduce_group_spark.worker_daemon`, which re-reads an archive only
+when it changed; on Python 3.12+ it changes nothing. The daemon imports this
+package before it forks, so the package's parent directory goes on the
+workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``; Spark merges it
+with the rest of the worker path) — without it a session started outside the
+checkout fails every Python task at daemon launch. Vanilla sessions (rule 6)
+keep PySpark's own daemon and stay correct, only slower per task.
 """
 
 from __future__ import annotations
@@ -14,6 +28,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -53,6 +70,10 @@ def get_session(app_name: str = "map-reduce-group-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers fork from the engine's daemon (module docstring);
+        # it imports this package, so put the package on the workers' path.
+        .config("spark.python.daemon.module", "map_reduce_group_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
